@@ -100,17 +100,6 @@ def build_parser() -> argparse.ArgumentParser:
     c.add_argument("--plug", required=True, choices=sorted(PLUGS))
     c.add_argument("--target-mb", type=int, default=128)
 
-    pr = sub.add_parser(
-        "promote", help="fold streaming _epoch dirs into the block-bucket layout"
-    )
-    pr.add_argument("--out", required=True, help="derived-table output root")
-    pr.add_argument("--plug", required=True, choices=sorted(PLUGS))
-    pr.add_argument("--step", type=int, default=100)
-    pr.add_argument(
-        "--drain", action="store_true",
-        help="also promote the latest epoch (only when the stream is stopped)",
-    )
-
     cu = sub.add_parser(
         "curate",
         help="run the corpus-curation funnel (dedup → gates → sample → "
@@ -447,25 +436,6 @@ def main(argv: list[str] | None = None) -> int:
             spark, args.out, args.plug, target_bytes=args.target_mb << 20
         )
         print(json.dumps({"plug": args.plug, **stats}))
-    elif args.cmd == "promote":
-        import os
-
-        from haf_plug_play_spark.runner.fs import LocalFS
-        from haf_plug_play_spark.runner.maintenance import promote_epochs
-
-        fs = LocalFS()
-        root = os.path.join(args.out, args.plug)
-        total = {"epochs_promoted": 0, "buckets_written": 0}
-        for table in fs.listdir(root):
-            if table.endswith(".maintenance"):
-                continue
-            s = promote_epochs(
-                spark, os.path.join(root, table), args.step, fs=fs,
-                keep_latest=not args.drain,
-            )
-            for k in total:
-                total[k] += s[k]
-        print(json.dumps({"plug": args.plug, **total}))
     elif args.cmd == "curate":
         from haf_plug_play_spark.ext.curate import run_curate
 

@@ -17,29 +17,19 @@ weak-reference ContextCleaner frees them — measured r15: late-suite
 queries degraded 2×+ (XK-hll-overlap 6.1 s in-suite vs 2.7 isolated)
 from eviction churn and execution-memory starvation. Disk-only blocks
 cost a serialize/deserialize per pass but leave the heap to the
-operators. Override with ``SPARK_GRAFT_MATERIALIZE_LEVEL`` (any
-``StorageLevel`` constant name) for cluster profiles where executor
-memory dwarfs the intermediates.
+operators.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
-
-_LEVEL_NAME = os.environ.get("SPARK_GRAFT_MATERIALIZE_LEVEL", "DISK_ONLY")
-
-
-def _level() -> StorageLevel:
-    return getattr(StorageLevel, _LEVEL_NAME, StorageLevel.DISK_ONLY)
 
 
 def materialize(df: DataFrame) -> DataFrame:
     """Compute ``df`` once, eagerly, and return a frame whose consumers
     read the stored blocks instead of re-deriving the lineage."""
-    return df.localCheckpoint(eager=True, storageLevel=_level())
+    return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
 
 
 def release_scratch(spark) -> int:

@@ -1,1 +1,1 @@
-from haf_plug_play_spark.plugs.framework import PLUGS, Plug, run_plug  # noqa: F401
+from haf_plug_play_spark.plugs.framework import PLUGS, Plug  # noqa: F401

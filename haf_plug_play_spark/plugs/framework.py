@@ -58,11 +58,6 @@ class Plug:
         return (self.silver or self.transform)(parsed)
 
 
-def run_plug(plug: Plug, parsed: DataFrame) -> dict[str, DataFrame]:
-    """Apply one plug's transform to parsed envelope rows."""
-    return plug.transform(parsed)
-
-
 def _registry() -> dict[str, Plug]:
     from haf_plug_play_spark.plugs import hive_engine, podping, polls
 

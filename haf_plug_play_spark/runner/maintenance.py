@@ -27,12 +27,10 @@ concurrent calls.
 
 from __future__ import annotations
 
-import json
 import math
 import os
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from haf_plug_play_spark.runner.fs import LocalFS
 
@@ -40,13 +38,6 @@ DEFAULT_TARGET_BYTES = 128 << 20  # HDFS-block-sized files
 
 _TMP_PREFIX = "_compact_"
 _OLD_PREFIX = "_old_"
-
-# Epoch-promotion prefixes deliberately do NOT share _TMP/_OLD prefixes:
-# compaction's _recover must never mistake a promotion artifact for a
-# moved-aside bucket (it would "restore" it into the table dir).
-_PM_TMP_PREFIX = "_pm_tmp_"
-_PM_OLD_PREFIX = "_pm_old_"
-_PM_MANIFEST = "_pm_manifest.json"
 
 
 def _maint_dir(table_dir: str) -> str:
@@ -86,12 +77,6 @@ def compact_table(
     stats = {"buckets_compacted": 0, "files_before": 0, "files_after": 0}
     if not fs.isdir(table_dir):
         return stats
-    # Heal BOTH protocols before touching the table: a crashed promotion
-    # left either stray _pm_tmp_* staging (rolled back) or a committed
-    # manifest (finished forward). Skipping this and compacting over a
-    # half-promoted table would race _recover's view of which buckets
-    # exist — each maintenance op first heals its crashed sibling.
-    _recover_promotion(table_dir, fs)
     _recover(table_dir, fs)
     for entry in fs.listdir(table_dir):
         if not entry.startswith("block_bucket="):
@@ -140,144 +125,3 @@ def compact_plug(spark: SparkSession, out_root: str, plug_name: str, fs=None, **
         for k in total:
             total[k] += s[k]
     return total
-
-
-# ------------------------------------------------------- epoch promotion
-
-
-def _finish_promotion(table_dir: str, fs, manifest: dict) -> None:
-    """Phase 2 of promotion — idempotent, resumable from any crash point.
-    The manifest is only written once every staged bucket is fully on disk,
-    so reaching here means the staged data is complete; each step below can
-    be re-run safely (skips what already happened)."""
-    mdir = _maint_dir(table_dir)
-    for entry in manifest["buckets"]:
-        tmp = os.path.join(mdir, _PM_TMP_PREFIX + entry)
-        old = os.path.join(mdir, _PM_OLD_PREFIX + entry)
-        bdir = os.path.join(table_dir, entry)
-        if fs.exists(tmp):
-            if fs.isdir(bdir):
-                fs.rename(bdir, old)
-            fs.rename(tmp, bdir)
-        fs.delete(old)  # may exist from a crashed earlier attempt
-    for epoch in manifest["epochs"]:
-        fs.delete(os.path.join(table_dir, epoch))
-    fs.delete(os.path.join(mdir, _PM_MANIFEST))
-
-
-def _recover_promotion(table_dir: str, fs) -> None:
-    """Manifest present → phase 1 completed, finish phase 2. No manifest →
-    roll back stray staging dirs (the epochs are still the truth)."""
-    mdir = _maint_dir(table_dir)
-    entries = fs.listdir(mdir)
-    if _PM_MANIFEST in entries:
-        manifest = json.loads(fs.read_bytes(os.path.join(mdir, _PM_MANIFEST)))
-        _finish_promotion(table_dir, fs, manifest)
-        return
-    for entry in entries:
-        if entry.startswith((_PM_TMP_PREFIX, _PM_OLD_PREFIX)):
-            # _PM_OLD_ without a manifest cannot happen in-protocol (olds are
-            # created only in phase 2, under a manifest) — treat as garbage.
-            fs.delete(os.path.join(mdir, entry))
-
-
-def promote_epochs(
-    spark: SparkSession,
-    table_dir: str,
-    step: int,
-    target_bytes: int = DEFAULT_TARGET_BYTES,
-    fs=None,
-    keep_latest: bool = True,
-) -> dict:
-    """Fold streaming ``_epoch=N`` dirs into the batch ``block_bucket=``
-    layout, so a long-lived stream's output converges to the same layout
-    the batch runner writes — one compactor, one pruning story, bounded
-    file counts (VERDICT r2 "What's missing" #4).
-
-    ``keep_latest`` leaves the highest epoch id untouched: foreachBatch is
-    at-least-once, and the only epoch that can ever be retried after a
-    crash is the last (ids are monotonic) — promoting it and then having
-    the retry re-write ``_epoch=N`` would double its rows. With the stream
-    stopped, pass ``keep_latest=False`` to drain fully.
-
-    Crash-safety is a two-phase, manifest-gated protocol (single writer,
-    same assumption as ``compact_table``):
-
-    - Phase 1 stages every affected bucket's MERGED content (existing
-      bucket rows ∪ epoch rows, re-sorted by block_num for zone maps) in
-      the maintenance side-car. A crash here leaves stray ``_pm_tmp_*``
-      dirs; recovery deletes them — the epochs are still the only truth.
-    - The manifest (epoch list + bucket list) is then written atomically:
-      it is the commit point.
-    - Phase 2 swaps buckets via the rename-pair and deletes the epoch
-      dirs; every step is idempotent, so recovery simply re-runs it.
-
-    Readers are unchanged: the streaming reader's recursiveFileLookup scan
-    returns identical rows before, during (single-writer window aside) and
-    after; the batch reader gains partition pruning over the promoted rows.
-    """
-    fs = fs or LocalFS()
-    stats = {"epochs_promoted": 0, "buckets_written": 0}
-    if not fs.isdir(table_dir):
-        return stats
-    # Heal a crashed COMPACTION first (then our own protocol): if compact
-    # crashed between its rename pair, the bucket sits in .maintenance as
-    # _old_X with the table-dir bucket missing. Promotion would otherwise
-    # see the bucket as absent, write a fresh block_bucket=X holding only
-    # epoch rows, and the next compaction's _recover would then delete
-    # _old_X (bucket "exists" again) — silently losing the original rows.
-    _recover(table_dir, fs)
-    _recover_promotion(table_dir, fs)
-    epochs = sorted(
-        (e for e in fs.listdir(table_dir) if e.startswith("_epoch=")),
-        key=lambda e: int(e.split("=", 1)[1]),
-    )
-    if keep_latest and epochs:
-        epochs = epochs[:-1]
-    if not epochs:
-        return stats
-    mdir = _maint_dir(table_dir)
-    fs.makedirs(mdir)
-
-    src = (
-        spark.read.parquet(*[os.path.join(table_dir, e) for e in epochs])
-        .withColumn("_bucket", (F.col("block_num") / step).cast("long"))
-    )
-    # Bounded collect: one small int per bucket touched by this promotion
-    # window — epochs cover a bounded block range, not the table's history.
-    buckets = sorted(r[0] for r in src.select("_bucket").distinct().collect())
-    epoch_bytes = sum(
-        fs.getsize(os.path.join(table_dir, e, f))
-        for e in epochs
-        for f in fs.listdir(os.path.join(table_dir, e))
-        if f.endswith(".parquet")
-    )
-    bucket_names = []
-    for b in buckets:
-        entry = f"block_bucket={b}"
-        bucket_names.append(entry)
-        bdir = os.path.join(table_dir, entry)
-        merged = src.filter(F.col("_bucket") == b).drop("_bucket")
-        size = epoch_bytes // max(1, len(buckets))
-        if fs.isdir(bdir):
-            merged = merged.unionByName(spark.read.parquet(bdir))
-            size += sum(
-                fs.getsize(os.path.join(bdir, f))
-                for f in fs.listdir(bdir)
-                if f.endswith(".parquet")
-            )
-        n_out = max(1, math.ceil(size / target_bytes))
-        (
-            merged.coalesce(n_out)
-            .sortWithinPartitions("block_num")
-            .write.mode("overwrite")
-            .parquet(os.path.join(mdir, _PM_TMP_PREFIX + entry))
-        )
-        stats["buckets_written"] += 1
-    manifest = {"epochs": epochs, "buckets": bucket_names}
-    fs.write_bytes_atomic(
-        os.path.join(mdir, _PM_MANIFEST), json.dumps(manifest).encode()
-    )
-    _finish_promotion(table_dir, fs, manifest)
-    stats["epochs_promoted"] = len(epochs)
-    return stats

@@ -1,12 +1,15 @@
 """Structured Streaming wrapper, health assessment, watchdog.
 
 Reference parity:
-- live sync loop (T1-T3): database/sql/sync.sql:3-42 → ``readStream`` over
-  the op log + ``foreachBatch`` running the same plug transforms; offsets
-  live in the Spark checkpoint instead of hpp.plug_state.
-- exactly-once (T3): each epoch's rows land under ``_epoch=N`` and a retried
-  epoch overwrites its own directory — idempotent replay, mirroring the
-  reference's commit-per-chunk (sync.sql:108-111).
+- live sync loop (T1-T4): database/sql/sync.sql:3-42,59-117 → ``readStream``
+  over the op log is only the trigger; each micro-batch's block range runs
+  through ``PlugRunner.backfill``, so live and massive sync share one
+  commit path and one table layout.
+- exactly-once (T3): a replayable source plus an idempotent sink — each
+  chunk overwrites exactly its own ``block_bucket`` partitions and writes
+  the cursor last (sync.sql:108-111), and a replayed epoch falls at or
+  below the cursor, so it is a no-op. This assumes a block-ordered op log
+  (SURVEY T13); forks go through ``PlugRunner.recover_fork``.
 - health (T12): server/system_status.py:12-29 — BAD when any enabled plug
   lags the head by > 10 blocks or the head is > 30 s stale.
 - watchdog (T11): database/plugs.py:89-102 — restart dead queries, flag
@@ -25,8 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from haf_plug_play_spark.ingest.envelope import dead_letter, parse_custom_json
 from haf_plug_play_spark.plugs.framework import Plug
+from haf_plug_play_spark.runner.batch import DEFAULT_STEP, PlugRunner
 from haf_plug_play_spark.runner.state import PlugStateStore
 
 MAX_HEALTHY_LAG_BLOCKS = 10  # server/system_status.py:23
@@ -35,7 +38,8 @@ STUCK_SYNC_S = 60  # database/sql/functions.sql:43
 
 
 class StreamingPlugRunner:
-    """Runs a plug as a streaming query over a growing op-log directory."""
+    """Runs a plug as a streaming query over a growing op-log directory: a
+    thin trigger over ``PlugRunner``, which owns the writes and the cursor."""
 
     def __init__(
         self,
@@ -46,68 +50,25 @@ class StreamingPlugRunner:
         out_root: str,
         checkpoint_root: str | None = None,
         fs=None,
+        step: int = DEFAULT_STEP,
     ) -> None:
         self.spark = spark
         self.plug = plug
         self.ops_path = ops_path
-        self.trx_path = trx_path
-        self.out_root = out_root
         self.checkpoint = checkpoint_root or os.path.join(out_root, "_checkpoints", plug.name)
-        self.store = PlugStateStore(os.path.join(out_root, "_state"), fs=fs)
-
-    def _table_dir(self, table: str) -> str:
-        return os.path.join(self.out_root, self.plug.name, table)
-
-    def _trx_for_range(self, lo: int, hi: int) -> DataFrame:
-        """Trx scan clipped to a block range — the filter reaches the parquet
-        scan (PushedFilters), mirroring the batch path (batch.py). Without
-        this, every epoch re-read the ENTIRE trx log: a per-epoch full scan
-        of a 100 TB table, for a join that only needs the batch's blocks."""
-        return self.spark.read.parquet(self.trx_path).filter(
-            F.col("block_num").between(lo, hi)
+        self.runner = PlugRunner(
+            spark, plug, ops_path, trx_path, out_root, step=step, fs=fs
         )
+        self.store = self.runner.store
 
     def _process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        trx = None
-        if self.trx_path:
-            rng = batch_df.agg(
-                F.min("block_num").alias("lo"), F.max("block_num").alias("hi")
-            ).first()
-            if rng is not None and rng.lo is not None:
-                trx = self._trx_for_range(int(rng.lo), int(rng.hi))
-        # persist: the parse feeds one write per output table plus the
-        # head agg — the same N+1-scans-per-chunk defect review r9 fixed
-        # in PlugRunner.process_range, which this path had missed
-        parsed = parse_custom_json(batch_df, trx).persist()
-        try:
-            out = dict(self.plug.silver_transform(parsed))
-            # T14 parity with the batch runner: malformed-but-matched ops
-            # land in a queryable dead-letter table on the LIVE path too —
-            # a stream that silently drops evidence diverges from the
-            # backfill of the same log
-            out["_dead_letter"] = dead_letter(parsed, self.plug.cj_ids)
-            for table, df in out.items():
-                # overwrite-by-epoch: replaying epoch N rewrites only its own dir
-                df.write.mode("overwrite").parquet(
-                    os.path.join(self._table_dir(table), f"_epoch={epoch_id}")
-                )
-            head = parsed.agg(
-                F.max("block_num").alias("b"), F.max("created").alias("t")
-            ).first()
-        finally:
-            parsed.unpersist()
-        state = self.store.load(self.plug.name)
-        if head and head.b is not None:
-            # monotonic cursor AND time: a replayed epoch (restart after a
-            # crash between write and checkpoint commit) must not rewind
-            # either — the time previously rode every replay while the
-            # cursor held (the review-r9 batch fix, missed here), and a
-            # NULL created max must not kill the stream in foreachBatch
-            advanced = int(head.b) > state.latest_block_num
-            state.latest_block_num = max(state.latest_block_num, int(head.b))
-            if advanced and head.t is not None:
-                state.latest_block_time = head.t.strftime("%Y-%m-%dT%H:%M:%S")
-        self.store.save(state)
+        rng = batch_df.agg(
+            F.min("block_num").alias("lo"), F.max("block_num").alias("hi")
+        ).first()
+        if rng.lo is None or not self.runner.backfill(int(rng.lo), int(rng.hi)):
+            # empty or replayed batch: nothing to commit, but the delivery
+            # still checks in — PlugWatchdog reads check_in as liveness
+            self.store.save(self.store.load(self.plug.name))
 
     def start(self, ops_schema, available_now: bool = True) -> StreamingQuery:
         # per-plug scheduler pool, mirroring the batch path (see
@@ -130,33 +91,7 @@ class StreamingPlugRunner:
         return writer.start()
 
     def read_table(self, table: str) -> DataFrame:
-        return self.spark.read.option("recursiveFileLookup", "true").parquet(
-            self._table_dir(table)
-        )
-
-    def promote_epochs(self, step: int = 100, fs=None, keep_latest: bool = True) -> dict:
-        """Fold accumulated ``_epoch=N`` dirs into the batch block-bucket
-        layout (maintenance.promote_epochs) for every table this plug has
-        written. Run between triggers or while the stream is stopped (pass
-        ``keep_latest=False`` only when stopped). A long-lived stream calls
-        this periodically so its table dirs stay at a bounded file count
-        instead of one dir per epoch forever."""
-        from haf_plug_play_spark.runner.fs import LocalFS
-        from haf_plug_play_spark.runner.maintenance import promote_epochs
-
-        fs = fs or LocalFS()
-        root = os.path.join(self.out_root, self.plug.name)
-        total = {"epochs_promoted": 0, "buckets_written": 0}
-        for table in fs.listdir(root):
-            if table.endswith(".maintenance"):
-                continue
-            s = promote_epochs(
-                self.spark, os.path.join(root, table), step, fs=fs,
-                keep_latest=keep_latest,
-            )
-            for k in total:
-                total[k] += s[k]
-        return total
+        return self.runner.read_table(table)
 
 
 # ---------------------------------------------------------------- health

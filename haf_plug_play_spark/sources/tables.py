@@ -67,9 +67,7 @@ def _session_defaults(spark: SparkSession) -> None:
 #: Tables below this size are left on their natural splits: fanning a
 #: dimension table out to every core costs more in task scheduling than
 #: the map work it parallelizes.
-_PARALLELIZE_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_PARALLELIZE_MIN_BYTES", 256 * 1024)
-)
+_PARALLELIZE_MIN_BYTES = 256 * 1024
 
 #: Row-weight gate for AUTO parallelization: only tables whose compressed
 #: footprint is at least this many bytes per row are fanned out. Fat rows
@@ -79,9 +77,7 @@ _PARALLELIZE_MIN_BYTES = int(
 #: plain aggregates where the extra exchange COSTS more than the
 #: parallelism returns (measured r15: QJ4-theta 2.55→1.36 s, QJ1 1.58→0.93
 #: without the repartition, vs XD-containment 3.81→3.33 WITH it).
-_PARALLELIZE_MIN_BYTES_PER_ROW = int(
-    os.environ.get("SPARK_GRAFT_PARALLELIZE_MIN_BYTES_PER_ROW", 64)
-)
+_PARALLELIZE_MIN_BYTES_PER_ROW = 64
 
 
 def _parquet_num_rows(path: str) -> int | None:

@@ -1,5 +1,5 @@
 """CLI surface tests (cli.main with argv, no subprocess): backfill →
-status → compact → promote against a generated op log, mirroring the
+status → compact against a generated op log, mirroring the
 reference's run_plug_play.py entry-point flow."""
 
 from __future__ import annotations
@@ -37,34 +37,6 @@ def test_cli_backfill_status_compact_promote(spark, tmp_path, capsys):
 
     compacted = _run(capsys, ["compact", "--out", out, "--plug", "podping"])
     assert compacted["files_before"] >= compacted["files_after"]
-
-    # promote is a no-op on a batch-only table (no _epoch dirs) — but must
-    # run cleanly over the same layout
-    promoted = _run(capsys, ["promote", "--out", out, "--plug", "podping"])
-    assert promoted == {"plug": "podping", "epochs_promoted": 0, "buckets_written": 0}
-
-
-def test_cli_promote_streamed_table(spark, tmp_path, capsys):
-    from haf_plug_play_spark.plugs import PLUGS
-    from haf_plug_play_spark.runner.streaming import StreamingPlugRunner
-
-    ops_df, trx_df = fixtures.as_dataframes(spark, 400, 9)
-    ops, trx = str(tmp_path / "ops"), str(tmp_path / "trx")
-    out = str(tmp_path / "out")
-    ops_df.repartition(8).write.parquet(ops)
-    trx_df.write.parquet(trx)
-    runner = StreamingPlugRunner(spark, PLUGS["podping"], ops, trx, out)
-    q = runner.start(fixtures.OPS_SCHEMA, available_now=True)
-    q.awaitTermination(120)
-    before = runner.read_table("podping_updates").count()
-
-    promoted = _run(capsys, [
-        "promote", "--out", out, "--plug", "podping", "--drain",
-    ])
-    assert promoted["epochs_promoted"] >= 2
-    tdir = os.path.join(out, "podping", "podping_updates")
-    assert [e for e in os.listdir(tdir) if e.startswith("_epoch=")] == []
-    assert runner.read_table("podping_updates").count() == before
 
 
 def test_cli_snapshot_lifecycle(spark, tmp_path, capsys):

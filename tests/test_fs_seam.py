@@ -128,44 +128,6 @@ def test_fork_recovery_through_hadoop_fs(spark, tmp_path):
     assert runner.read_table("podping_updates").count() == full
 
 
-def test_cross_protocol_recovery_through_hadoop_fs(spark, tmp_path):
-    """The compact-crash → promote healing sequence (maintenance.py
-    cross-recovery), with every control-plane call on the Hadoop
-    FileSystem API: promotion must restore the parked _old_ bucket through
-    HadoopFS before folding epochs in."""
-    from pyspark.sql import functions as F
-
-    from haf_plug_play_spark.runner.maintenance import (
-        _OLD_PREFIX,
-        promote_epochs,
-    )
-
-    hfs = HadoopFS(spark)
-    tdir = str(tmp_path / "tbl")
-    (
-        spark.range(100)
-        .select(F.col("id").alias("block_num"), (F.col("id") * 2).alias("payload"))
-        .write.parquet(os.path.join(tdir, "block_bucket=0"))
-    )
-    # simulate the compact crash window via the SAME fs implementation
-    mdir = tdir + ".maintenance"
-    hfs.makedirs(mdir)
-    hfs.rename(
-        os.path.join(tdir, "block_bucket=0"),
-        os.path.join(mdir, _OLD_PREFIX + "block_bucket=0"),
-    )
-    (
-        spark.range(100)
-        .select(F.col("id").alias("block_num"), (F.col("id") * 3).alias("payload"))
-        .write.parquet(os.path.join(tdir, "_epoch=0"))
-    )
-    promote_epochs(spark, tdir, step=100, fs=hfs, keep_latest=False)
-    assert hfs.listdir(mdir) == []
-    assert (
-        spark.read.parquet(os.path.join(tdir, "block_bucket=0")).count() == 200
-    )
-
-
 def test_write_bytes_atomic_survives_rename_that_landed_then_raised(
     spark, tmp_path
 ):

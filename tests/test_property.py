@@ -584,12 +584,10 @@ def test_batch_live_schedule_parity_property(spark, tmp_path):
     and ``StreamingPlugRunner._process_batch`` must leave identical
     silver tables, identical dead-letter evidence, and identical
     block-time state. Actions per schedule: advance (next chunk as the
-    next epoch), replay (the crash-between-write-and-checkpoint
+    next epoch) and replay (the crash-between-write-and-checkpoint
     re-delivery of the LATEST chunk — the only replay a real stream
-    performs), and promote (folding streamed epochs into the batch
-    bucket layout, which must be content-invariant). 50 seeded
-    schedules; the action space is 3 kinds over 3 chunks, so this
-    covers the interleaving class, not samples it."""
+    performs). 50 seeded schedules; the action space is 2 kinds over 3
+    chunks, so this covers the interleaving class, not samples it."""
     import random
 
     from pyspark.sql import functions as F
@@ -629,7 +627,7 @@ def test_batch_live_schedule_parity_property(spark, tmp_path):
         )
         srun = StreamingPlugRunner(
             spark, PLUGS["podping"], ops_path, trx_path,
-            str(tmp_path / f"s{seed}"),
+            str(tmp_path / f"s{seed}"), step=step,
         )
 
         def deliver(idx):
@@ -643,14 +641,12 @@ def test_batch_live_schedule_parity_property(spark, tmp_path):
         deliver(0)
         done = 1
         for _ in range(rng.randint(1, 3)):
-            action = rng.choice(["advance", "replay", "promote"])
+            action = rng.choice(["advance", "replay"])
             if action == "advance" and done < len(chunks):
                 deliver(done)
                 done += 1
             elif action == "replay":
                 deliver(done - 1)
-            elif action == "promote":
-                srun.promote_epochs(step=step, keep_latest=True)
         for t in tables:
             assert rows(brun.read_table(t)) == rows(srun.read_table(t)), (
                 f"seed {seed}: table {t} diverged between batch and live"
@@ -658,8 +654,8 @@ def test_batch_live_schedule_parity_property(spark, tmp_path):
         bst = brun.store.load("podping")
         sst = srun.store.load("podping")
         assert bst.latest_block_time == sst.latest_block_time, f"seed {seed}"
-        # cursor semantics differ by design: batch records the processed
-        # RANGE END; live records the highest block SEEN — both must
+        # both record a range end: batch the chunk's, live its batch's
+        # (min, max) block range, i.e. the highest block SEEN — both must
         # cover every delivered op and the batch cursor the full range
         assert bst.latest_block_num == chunks[done - 1][1], f"seed {seed}"
         max_seen = ops_all.filter(

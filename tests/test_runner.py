@@ -188,7 +188,7 @@ def test_fork_recovery(spark, oplog, tmp_path):
 def test_streaming_matches_batch(spark, oplog, tmp_path):
     ops_path, trx_path, _, _ = oplog
     srunner = StreamingPlugRunner(
-        spark, PLUGS["polls"], ops_path, trx_path, str(tmp_path)
+        spark, PLUGS["polls"], ops_path, trx_path, str(tmp_path), step=STEP
     )
     q = srunner.start(fixtures.OPS_SCHEMA, available_now=True)
     q.awaitTermination(120)
@@ -198,6 +198,28 @@ def test_streaming_matches_batch(spark, oplog, tmp_path):
         srunner.read_table("polls_creates"), srunner.read_table("polls_deletes")
     )
     _assert_same(content, expected["polls_content"], "polls_content")
+
+
+def test_stream_after_backfill_hand_off(spark, oplog, tmp_path):
+    """T4 hand-off: massive sync, then the live stream over the SAME
+    out_root. The stream re-delivers the whole log, which sits at or below
+    the backfill cursor, so it must neither double rows nor write a second
+    layout next to the block buckets that serving reads."""
+    ops_path, trx_path, lo, hi = oplog
+    runner = PlugRunner(
+        spark, PLUGS["podping"], ops_path, trx_path, str(tmp_path), step=STEP
+    )
+    runner.backfill(lo, hi)
+    srunner = StreamingPlugRunner(
+        spark, PLUGS["podping"], ops_path, trx_path, str(tmp_path), step=STEP
+    )
+    q = srunner.start(fixtures.OPS_SCHEMA, available_now=True)
+    q.awaitTermination(120)
+    expected = _expected(spark, ops_path, trx_path, PLUGS["podping"])
+    for table in ("podping_ops", "podping_updates"):
+        _assert_same(srunner.read_table(table), expected[table], table)
+        _assert_same(runner.read_table(table), expected[table], table)
+    assert runner.store.load("podping").latest_block_num == hi
 
 
 def test_sync_status(spark, oplog, tmp_path):
@@ -298,16 +320,17 @@ def test_per_plug_scheduler_pool(spark, oplog, tmp_path):
 
 
 def test_streaming_trx_scan_range_pushdown(spark, oplog, tmp_path):
-    """Each epoch's trx scan must clip to the batch's block range AND push
-    the range into the parquet scan — a per-epoch full scan of the trx log
-    is a scale-killer at 100 TB."""
+    """Each chunk's trx scan — batch and live alike, both commit through
+    ``PlugRunner.process_range`` — must clip to the chunk's block range AND
+    push the range into the parquet scan: a per-chunk full scan of the trx
+    log is a scale-killer at 100 TB."""
     from .test_plans import _plan
 
     ops_path, trx_path, lo, _ = oplog
-    srunner = StreamingPlugRunner(
-        spark, PLUGS["podping"], ops_path, trx_path, str(tmp_path)
+    runner = PlugRunner(
+        spark, PLUGS["podping"], ops_path, trx_path, str(tmp_path), step=STEP
     )
-    plan = _plan(srunner._trx_for_range(lo, lo + 99))
+    plan = _plan(runner._parsed_range(lo, lo + 99))
     assert f"GreaterThanOrEqual(block_num,{lo})" in plan
     assert f"LessThanOrEqual(block_num,{lo + 99})" in plan
 
@@ -351,7 +374,9 @@ def test_watchdog_cancels_stuck_live_query(tmp_path):
 def test_watchdog(spark, oplog, tmp_path):
     ops_path, trx_path, _, _ = oplog
     store = PlugStateStore(str(tmp_path / "_state"))
-    srunner = StreamingPlugRunner(spark, PLUGS["podping"], ops_path, trx_path, str(tmp_path))
+    srunner = StreamingPlugRunner(
+        spark, PLUGS["podping"], ops_path, trx_path, str(tmp_path), step=STEP
+    )
 
     def restart():
         return srunner.start(fixtures.OPS_SCHEMA, available_now=True)
@@ -464,7 +489,7 @@ def test_streaming_dead_letter_and_replay_monotonicity(spark, oplog, tmp_path):
 
     ops_path, trx_path, lo, hi = oplog
     srunner = StreamingPlugRunner(
-        spark, PLUGS["polls"], ops_path, trx_path, str(tmp_path)
+        spark, PLUGS["polls"], ops_path, trx_path, str(tmp_path), step=STEP
     )
     q = srunner.start(fixtures.OPS_SCHEMA, available_now=True)
     q.awaitTermination(120)
