@@ -6,9 +6,10 @@ Reference parity (/root/reference/haf_plug_play/database/sql/sync.sql):
   are no-ops.
 - micro-batch chunking (T2): sync.sql:59,72-77 — fixed block step.
 - per-chunk atomic commit (T3): sync.sql:108-111 — here: idempotent
-  overwrite of exactly the chunk's block-bucket partitions, cursor written
-  last; a replayed chunk rewrites the same partitions byte-identically, so
-  retries are exactly-once in effect.
+  overwrite of exactly the chunk's block-bucket partitions, the chunk's
+  tables written concurrently (one thread each), cursor written last,
+  after every write has succeeded; a replayed chunk rewrites the same
+  partitions byte-identically, so retries are exactly-once in effect.
 - massive vs live sync (T4): one code path — ``backfill`` over a large range
   IS massive sync; the streaming wrapper drives ``backfill`` per
   micro-batch (runner/streaming.py), so every path inherits backfill's
@@ -25,15 +26,21 @@ chunk's buckets; nothing ever reads or collects an unbounded set.
 
 from __future__ import annotations
 
+import functools
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from haf_plug_play_spark.fixtures import OPS_SCHEMA, TRX_SCHEMA
 from haf_plug_play_spark.ingest.envelope import dead_letter, parse_custom_json
 from haf_plug_play_spark.plugs.framework import Plug
 from haf_plug_play_spark.runner.fs import LocalFS
 from haf_plug_play_spark.runner.state import PlugStateStore
+from haf_plug_play_spark.sources.oplog import read_ops, read_trx
 
 DEFAULT_STEP = 100  # blocks per chunk — sync.sql:59
 
@@ -66,12 +73,13 @@ class PlugRunner:
         return os.path.join(self.out_root, self.plug.name, table)
 
     def _parsed_range(self, first: int, last: int) -> DataFrame:
-        ops = self.spark.read.parquet(self.ops_path).filter(
+        # declared op-log schemas: no schema-inference job per chunk
+        ops = read_ops(self.spark, self.ops_path).filter(
             F.col("block_num").between(first, last)
         )
         trx = None
         if self.trx_path:
-            trx = self.spark.read.parquet(self.trx_path).filter(
+            trx = read_trx(self.spark, self.trx_path).filter(
                 F.col("block_num").between(first, last)
             )
         return parse_custom_json(ops, trx)
@@ -81,10 +89,16 @@ class PlugRunner:
             raise ValueError(f"append table {table} must carry block_num")
         (
             df.withColumn("block_bucket", (F.col("block_num") / self.step).cast("long"))
-            .repartition("block_bucket")
+            # a chunk is one bucket (process_range's guard), so one task
+            # writes it: coalesce gives the bucket its single file without
+            # the exchange a repartition on block_bucket would add
+            .coalesce(1)
             # sorted files → tight parquet min/max zone maps on block_num,
-            # so sub-bucket range predicates skip row groups (SCALE.md)
-            .sortWithinPartitions("block_num")
+            # so sub-bucket range predicates skip row groups (SCALE.md). The
+            # partition column leads the key because the writer requires
+            # that order and would otherwise re-sort by it alone, losing
+            # the block_num order
+            .sortWithinPartitions("block_bucket", "block_num")
             .write.mode("overwrite")
             # per-write dynamic overwrite: replaces only the touched buckets
             # without flipping the session-wide overwrite semantics
@@ -93,30 +107,37 @@ class PlugRunner:
             .parquet(self._table_dir(table))
         )
 
-    def read_table(self, table: str) -> DataFrame:
-        """Cumulative silver table (all processed chunks). A table whose
-        chunks were all empty has no parquet footers to infer from — fall
-        back to the transform's schema on a zero-row parse. ONLY the
-        path-missing case falls back (review r9): a corrupt footer,
-        permission failure, or transient FS error must surface, not get
-        served as an empty-but-200 table."""
-        from pyspark.errors import AnalysisException
+    @functools.cached_property
+    def _schemas(self) -> dict[str, T.StructType]:
+        """Each output table's on-disk schema, ``block_bucket`` included:
+        the plug's transform over an empty op log, made nullable as every
+        parquet read is. Building it launches no Spark job."""
+        parsed = parse_custom_json(
+            self.spark.createDataFrame([], OPS_SCHEMA),
+            self.spark.createDataFrame([], TRX_SCHEMA) if self.trx_path else None,
+        )
+        out = dict(self.plug.silver_transform(parsed))
+        out["_dead_letter"] = dead_letter(parsed, self.plug.cj_ids)
+        return {
+            table: _nullable(df.schema).add("block_bucket", T.LongType())
+            for table, df in out.items()
+        }
 
-        try:
-            return self.spark.read.parquet(self._table_dir(table)).drop("block_bucket")
-        except AnalysisException as e:
-            # PATH_NOT_FOUND: never synced; UNABLE_TO_INFER_SCHEMA: synced
-            # but every chunk was empty (dir exists, no footers)
-            if not any(
-                c in str(e) for c in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-            ):
-                raise
-            empty_parsed = parse_custom_json(
-                self.spark.read.parquet(self.ops_path).limit(0)
-            )
-            if table == "_dead_letter":
-                return dead_letter(empty_parsed, self.plug.cj_ids)
-            return self.plug.silver_transform(empty_parsed)[table]
+    def read_table(self, table: str) -> DataFrame:
+        """Cumulative silver table (all processed chunks), read with the
+        table's declared schema, so no schema-inference job runs. A table
+        never synced reads as empty with that schema; so does one whose
+        chunks were all empty (its directory holds no parquet file). A
+        corrupt footer, permission failure or transient FS error surfaces
+        when the frame is first evaluated rather than when this returns,
+        and is still never served as an empty-but-200 table (review r9)."""
+        schema = self._schemas[table]
+        tdir = self._table_dir(table)
+        if not self.fs.isdir(tdir):
+            df = self.spark.createDataFrame([], schema)
+        else:
+            df = self.spark.read.schema(schema).parquet(tdir)
+        return df.drop("block_bucket")
 
     def read_gold(self, table: str) -> DataFrame:
         """Gold view over cumulative silver tables (e.g. polls_content)."""
@@ -175,8 +196,22 @@ class PlugRunner:
                     F.max("block_num").alias("b"), F.max("created").alias("t")
                 ).first()
             )
-            for table, df in out.items():
-                self._write_append_table(table, df)
+            # one thread per table: each write's fixed cost is mostly
+            # planning and job set-up, so the writes overlap instead of
+            # queueing. The threads inherit this thread's scheduler pool
+            # and job group.
+            with ThreadPoolExecutor(max_workers=len(out)) as pool:
+                writes = [
+                    pool.submit(
+                        inheritable_thread_target(self.spark)(self._write_append_table),
+                        table,
+                        df,
+                    )
+                    for table, df in out.items()
+                ]
+            # all writes have finished; the first failure aborts the commit
+            for w in writes:
+                w.result()
         finally:
             parsed.unpersist()
         state = self.store.load(self.plug.name)
@@ -280,3 +315,17 @@ class PlugRunner:
         state = self.store.load(self.plug.name)
         state.latest_block_num = min(state.latest_block_num, fork_block)
         self.store.save(state)
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and value nullable — the schema a
+    parquet read reports whatever the writer declared."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt

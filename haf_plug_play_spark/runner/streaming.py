@@ -31,6 +31,7 @@ from pyspark.sql.streaming import StreamingQuery
 from haf_plug_play_spark.plugs.framework import Plug
 from haf_plug_play_spark.runner.batch import DEFAULT_STEP, PlugRunner
 from haf_plug_play_spark.runner.state import PlugStateStore
+from haf_plug_play_spark.sources.oplog import read_ops
 
 MAX_HEALTHY_LAG_BLOCKS = 10  # server/system_status.py:23
 MAX_HEALTHY_HEAD_AGE_S = 30  # server/system_status.py:25-26
@@ -109,7 +110,7 @@ def sync_status(
     # PROCESS-local timezone, which would skew the age by the UTC offset on
     # non-UTC hosts; unix_timestamp is timezone-proof.
     head = (
-        spark.read.parquet(ops_path)
+        read_ops(spark, ops_path)
         .agg(
             F.max("block_num").alias("b"),
             F.max(F.unix_timestamp("timestamp")).alias("epoch"),

@@ -15,10 +15,12 @@ Engine-wide session defaults (SURVEY.md §1.2, §7.0):
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
+_SHM = "/dev/shm"  # RAM-backed scratch candidate, see _default_local_dir
 
 
 def _default_driver_memory() -> str:
@@ -67,22 +69,34 @@ def _default_local_dir() -> str | None:
     - ``SPARK_GRAFT_LOCAL_DIR`` explicitly names the scratch dir;
     - a caller-set ``SPARK_LOCAL_DIRS`` wins over anything here (Spark
       reads it above ``spark.local.dir``; on YARN/K8s the cluster manager
-      sets it and this function is irrelevant anyway);
+      sets it and this function is irrelevant anyway) — so when both are
+      set, ``SPARK_GRAFT_LOCAL_DIR`` is ignored, with a warning;
     - ``/dev/shm`` is used only when it is a real mount with at least
-      16 GiB free — small CI boxes fall through to the default.
+      16 GiB free — small CI boxes fall through to the default. The dir
+      is per OS user (``spark_graft_scratch-<uid>``, mode 0700), so two
+      users never share scratch; one this user cannot write to also
+      falls through to the default.
     """
     explicit = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
+    cluster = os.environ.get("SPARK_LOCAL_DIRS")
     if explicit:
+        if cluster:
+            warnings.warn(
+                f"SPARK_LOCAL_DIRS={cluster} overrides "
+                f"SPARK_GRAFT_LOCAL_DIR={explicit}: Spark puts its scratch "
+                "in SPARK_LOCAL_DIRS",
+                stacklevel=2,
+            )
         return explicit
-    if os.environ.get("SPARK_LOCAL_DIRS"):
+    if cluster:
         return None
-    shm = "/dev/shm"
     try:
-        st = os.statvfs(shm)
+        st = os.statvfs(_SHM)
         if st.f_bavail * st.f_frsize >= 16 * 1024**3:
-            path = os.path.join(shm, "spark_graft_scratch")
-            os.makedirs(path, exist_ok=True)
-            return path
+            path = os.path.join(_SHM, f"spark_graft_scratch-{os.getuid()}")
+            os.makedirs(path, mode=0o700, exist_ok=True)
+            if os.access(path, os.W_OK):
+                return path
     except OSError:
         pass
     return None

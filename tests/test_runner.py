@@ -170,6 +170,129 @@ def test_read_gold_on_clean_oplog(spark, tmp_path):
     assert content.count() == 6
 
 
+@pytest.fixture(scope="module")
+def synced(spark, oplog, tmp_path_factory):
+    """Every plug backfilled over the whole ``oplog``, one runner each."""
+    ops_path, trx_path, lo, hi = oplog
+    out = str(tmp_path_factory.mktemp("synced"))
+    runners = {
+        name: PlugRunner(spark, PLUGS[name], ops_path, trx_path, out, step=STEP)
+        for name in ("podping", "polls", "hive_engine")
+    }
+    for runner in runners.values():
+        runner.backfill(lo, hi)
+    return runners
+
+
+def test_read_table_declared_schema_matches_inferred(spark, synced, tmp_path):
+    """``read_table`` reads with a schema derived from the plug's transform
+    instead of inferring it from the footers: for every silver table and
+    the dead letter, that schema (nullability included) and the rows must
+    equal what an inferring read of the same directory returns. A table
+    never synced reads as empty with the same schema."""
+    for name, runner in synced.items():
+        tables = runner._silver_table_names()
+        assert "_dead_letter" in tables and len(tables) > 2, name
+        fresh = PlugRunner(
+            spark, runner.plug, runner.ops_path, runner.trx_path,
+            str(tmp_path / name), step=STEP,
+        )
+        for table in tables:
+            inferred = spark.read.parquet(runner._table_dir(table)).drop("block_bucket")
+            got = runner.read_table(table)
+            assert got.schema == inferred.schema, (name, table)
+            assert _rows(got) == _rows(inferred), (name, table)
+            empty = fresh.read_table(table)
+            assert empty.schema == inferred.schema and empty.count() == 0, (name, table)
+
+
+def test_serving_context_launches_no_jobs(spark, synced):
+    """Building a serving context (every silver table plus the polls gold
+    view) is pure plan construction: no schema-inference job per table."""
+    sc = spark.sparkContext
+    group = "test-serving-context-no-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        for runner in synced.values():
+            for table in runner._silver_table_names():
+                runner.read_table(table)
+        synced["polls"].read_gold("polls_content")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_bucket_files_sorted_by_block_num(synced):
+    """Each bucket is one file sorted on block_num, so parquet min/max
+    stats on block_num are tight (SCALE.md)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    for runner in synced.values():
+        for table in runner._silver_table_names():
+            files = glob.glob(f"{runner._table_dir(table)}/block_bucket=*/*.parquet")
+            buckets = glob.glob(f"{runner._table_dir(table)}/block_bucket=*")
+            assert len(files) == len(buckets), table
+            for f in files:
+                blocks = pq.read_table(f, columns=["block_num"]).column(0).to_pylist()
+                assert blocks == sorted(blocks), f
+
+
+def test_failed_table_write_aborts_chunk_commit(spark, oplog, tmp_path, monkeypatch):
+    """The chunk's tables are written concurrently; one failed write must
+    fail the chunk and leave the cursor and block time where they were, and
+    a plain retry must converge to the one-shot result (exactly-once)."""
+    ops_path, trx_path, lo, hi = oplog
+    runner = PlugRunner(spark, PLUGS["polls"], ops_path, trx_path, str(tmp_path), step=STEP)
+    first_bucket_end = (lo // STEP) * STEP + STEP - 1
+    runner.backfill(lo, first_bucket_end)
+    before = runner.store.load("polls")
+    write = PlugRunner._write_append_table
+
+    def failing(self, table, df):
+        if table == "polls_votes":
+            raise RuntimeError("injected write failure")
+        write(self, table, df)
+
+    monkeypatch.setattr(PlugRunner, "_write_append_table", failing)
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        runner.process_range(first_bucket_end + 1, first_bucket_end + STEP)
+    after = runner.store.load("polls")
+    assert after.latest_block_num == before.latest_block_num
+    assert after.latest_block_time == before.latest_block_time
+    monkeypatch.undo()
+    runner.backfill(lo, hi)
+    _check_plug_outputs(runner, _expected(spark, ops_path, trx_path, PLUGS["polls"]))
+
+
+def test_chunk_writes_keep_job_group_and_pool(spark, oplog, tmp_path):
+    """The write threads inherit the caller's job group and the plug's
+    scheduler pool: every job of a chunk is attributed to the group the
+    chunk ran under, and every stage ran in the plug's pool."""
+    ops_path, trx_path, lo, _ = oplog
+    runner = PlugRunner(spark, PLUGS["polls"], ops_path, trx_path, str(tmp_path), step=STEP)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = "test-chunk-job-group"
+    sc.setJobGroup(group, group)
+    try:
+        runner.process_range(lo, (lo // STEP) * STEP + STEP - 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    jobs = list(tracker.getJobIdsForGroup(group))
+    tables = len(runner._silver_table_names())
+    assert len(jobs) >= tables + 1  # one write per table plus the cursor max
+    store = sc._jsc.sc().statusStore()
+    for job in jobs:
+        for stage in tracker.getJobInfo(job).stageIds:
+            attempt = store.lastStageAttempt(stage)
+            if attempt.status().toString() != "SKIPPED":  # never scheduled
+                assert attempt.schedulingPool() == "plug-polls"
+
+
 def test_fork_recovery(spark, oplog, tmp_path):
     ops_path, trx_path, lo, hi = oplog
     fork = lo + (hi - lo) * 2 // 3
