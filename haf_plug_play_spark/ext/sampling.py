@@ -598,51 +598,6 @@ def mixture_report(
     ).orderBy(stratum_col)
 
 
-def length_bucketed_batches(
-    df: DataFrame,
-    weight: Column,
-    batch_size: int = 32,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Dynamic-batching assignment — the padding-minimizing grouping a
-    sequence-model dataloader runs: documents bucket by
-    floor(log2(max(len, 1))) (power-of-two length buckets, the standard
-    scheme), and within each bucket deterministic batches of
-    ``batch_size`` form in id order. Each row reports its batch's
-    ``batch_max`` (the padding target) and ``pad_waste`` = batch_max −
-    len, so Σ pad_waste over the corpus is the padding cost of the
-    batching — compare against the unbucketed baseline to size buckets.
-
-    Plan shape: one window per keyed stage (rank within bucket, then max
-    within (bucket, batch)) — both partitioned by bounded keys, no global
-    sort; floor(log2(·)) is exact at the power-of-two boundaries on both
-    engines (powers of two are exact doubles), so bucket edges reproduce
-    in SQL. Output: (id, n_tok, len_bucket, batch_id, batch_max,
-    pad_waste) ordered by id.
-    """
-    staged = df.select(
-        F.col(id_col),
-        weight.cast("long").alias("n_tok"),
-    ).select(
-        id_col,
-        "n_tok",
-        F.floor(F.log2(F.greatest(F.col("n_tok"), F.lit(1))))
-        .cast("long")
-        .alias("len_bucket"),
-    )
-    rk = W.partitionBy("len_bucket").orderBy(id_col)
-    batched = staged.withColumn(
-        "batch_id",
-        ((F.row_number().over(rk) - 1) / batch_size).cast("long"),
-    )
-    bw = W.partitionBy("len_bucket", "batch_id")
-    return (
-        batched.withColumn("batch_max", F.max("n_tok").over(bw))
-        .withColumn("pad_waste", F.col("batch_max") - F.col("n_tok"))
-        .orderBy(id_col)
-    )
-
-
 def packing_report(
     packed: DataFrame,
     strata_cols: list[str],

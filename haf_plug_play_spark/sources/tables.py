@@ -1,12 +1,17 @@
 """Parquet table sources for the synthetic star schema (TESTDATA.md).
 
-Plain ``spark.read.parquet`` — Catalyst handles predicate pushdown, column
-pruning and partition pruning on these scans (SURVEY.md §4.2); the engine
-never pre-materializes or caches a table the query didn't ask for.
+A plain parquet scan with a declared schema — Catalyst handles predicate
+pushdown, column pruning and partition pruning on these scans (SURVEY.md
+§4.2); the engine never pre-materializes or caches a table the query didn't
+ask for. The schema is not inferred by a Spark job on every read: the
+driver reads each data file's footer once and converts it with Spark's own
+converter (``_footer_meta``), and only that metadata is cached, keyed by
+every data file's (path, size, mtime_ns) and the converter's confs.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,11 +30,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-# Dimension tables small enough to broadcast at any scale factor the engine
-# targets (catalog-style lookups — SURVEY.md S3/J3).
-BROADCAST_TABLES = frozenset({"region", "nation"})
-
 
 # Columns written as parquet TIMESTAMP(NANOS) (pandas/pyarrow default), which
 # Spark has no native type for. With nanosAsLong they arrive as LongType
@@ -80,27 +80,78 @@ _PARALLELIZE_MIN_BYTES = 256 * 1024
 _PARALLELIZE_MIN_BYTES_PER_ROW = 64
 
 
-def _parquet_num_rows(path: str) -> int | None:
-    """Row count from parquet footers — metadata only, no data read."""
-    try:
-        import pyarrow.parquet as pq
+#: SQL confs ``ParquetToSparkSchemaConverter(SQLConf)`` reads: each one can
+#: change the converted schema, so all are part of the footer cache key.
+_CONVERTER_CONFS = tuple(f"spark.sql.{k}" for k in (
+    "parquet.binaryAsString", "parquet.int96AsTimestamp",
+    "parquet.inferTimestampNTZ.enabled", "legacy.parquet.nanosAsLong",
+    "caseSensitive", "parquet.fieldId.read.enabled",
+    "parquet.ignoreVariantAnnotation",
+    "parquet.reader.respectUnknownTypeAnnotation.enabled",
+))
 
-        if os.path.isdir(path):
-            return sum(
-                pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            )
-        return pq.ParquetFile(path).metadata.num_rows
-    except Exception:
-        return None
+#: table path -> (key, metadata): one entry per path, so a rewrite replaces
+#: it. The key is the files' version and the confs, so every caller and
+#: session in the process can share an entry; a race only repeats a read.
+_FOOTERS: dict[str, tuple[tuple, tuple[T.StructType, int, int, int]]] = {}
+
+
+def _footer_meta(spark: SparkSession, path: str) -> tuple[T.StructType, int, int, int]:
+    """(schema, rows, bytes, data files) of a local parquet file or flat
+    directory, read from its footers on the driver: no Spark job.
+
+    ``ParquetFileFormat.readSchemaFromFooter`` with a
+    ``ParquetToSparkSchemaConverter`` over the session's SQLConf is the
+    code Spark's inference job runs, so the Spark row-metadata key and
+    ``nanosAsLong`` are honoured; like inference without ``mergeSchema``,
+    the first data file's schema is the table's. Cached under every data
+    file's (path, size, mtime_ns) and ``_CONVERTER_CONFS``. Names starting
+    with ``_`` or ``.`` are skipped, as Spark's file index skips them. A
+    missing or empty table raises Spark's own error; a corrupt footer
+    raises from the footer read."""
+    if os.path.isdir(path):
+        files = [os.path.join(path, n) for n in sorted(os.listdir(path))
+                 if not n.startswith(("_", "."))]
+    else:
+        files = [path] if os.path.exists(path) else []
+    if not files:
+        spark.read.parquet(path)  # PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA
+        raise FileNotFoundError(path)
+    stats = tuple((f, (st := os.stat(f)).st_size, st.st_mtime_ns) for f in files)
+    key = (stats, tuple(spark.conf.get(k) for k in _CONVERTER_CONFS))
+    hit = _FOOTERS.get(path)
+    if hit is not None and hit[0] == key:
+        return hit[1]
+    jvm = spark._jvm
+    pq, sql = jvm.org.apache.parquet.hadoop, jvm.org.apache.spark.sql.execution.datasources
+    converter = sql.parquet.ParquetToSparkSchemaConverter(
+        spark._jsparkSession.sessionState().conf()
+    )
+    hconf = spark._jsc.hadoopConfiguration()
+    schema, rows = None, 0
+    for f in files:
+        jpath = jvm.org.apache.hadoop.fs.Path(f)
+        reader = pq.ParquetFileReader.open(pq.util.HadoopInputFile.fromPath(jpath, hconf))
+        try:
+            rows += reader.getRecordCount()
+            if schema is None:
+                footer = pq.Footer(jpath, reader.getFooter())
+                schema = T.StructType.fromJson(json.loads(
+                    sql.parquet.ParquetFileFormat.readSchemaFromFooter(footer, converter).json()
+                ))
+        finally:
+            reader.close()
+    meta = (schema, rows, sum(size for _, size, _ in stats), len(files))
+    _FOOTERS[path] = (key, meta)
+    return meta
 
 
 def _input_parallelize(
     spark: SparkSession,
     df: DataFrame,
     size: int,
-    rows: int | None,
+    rows: int,
+    files: int,
     parallelize: bool | None,
 ) -> DataFrame:
     """Give a low-split input the session's parallelism (r15, guide §2.2).
@@ -114,9 +165,10 @@ def _input_parallelize(
     repartition of the base rows unlocks the map side for a few MB of
     shuffle. Two gates keep it from becoming a pessimization:
 
-    - split gate: estimated splits (bytes / maxPartitionBytes) must be
-      below half the cores — any real 100 TB layout takes the plain scan
-      with zero added shuffle (scale-adaptive, not a local[32] constant);
+    - split gate: estimated splits (bytes / maxPartitionBytes, at least
+      one per data file) must be below half the cores — any real 100 TB
+      layout takes the plain scan with zero added shuffle (scale-adaptive,
+      not a local[32] constant);
     - row-weight gate (AUTO mode only): compressed bytes/row must reach
       ``_PARALLELIZE_MIN_BYTES_PER_ROW``. Narrow relational tables flow
       into joins/simple aggregates where the added exchange+stage costs
@@ -133,17 +185,12 @@ def _input_parallelize(
     if parallelize is False:
         return df
     par = spark.sparkContext.defaultParallelism
-    raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "128m").lower()
-    mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "b": 1}
-    max_split = (
-        int(raw[:-1]) * mult[raw[-1]] if raw[-1] in mult else int(raw)
-    )
-    est_splits = max(1, (size + max_split - 1) // max_split)
+    max_split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    est_splits = max(files, (size + max_split - 1) // max_split)
     if size < _PARALLELIZE_MIN_BYTES or est_splits >= par // 2:
         return df
-    if parallelize is None and rows is not None and rows > 0:
-        if size / rows < _PARALLELIZE_MIN_BYTES_PER_ROW:
-            return df
+    if parallelize is None and rows > 0 and size / rows < _PARALLELIZE_MIN_BYTES_PER_ROW:
+        return df
     return df.repartition(par)
 
 
@@ -153,24 +200,22 @@ def load_table(
     name: str,
     parallelize: bool | None = None,
 ) -> DataFrame:
+    """Fixture table ``name`` of the local ``sf_dir``, timestamps normalized.
+
+    Read with ``spark.read.schema(...)``: the schema comes from the parquet
+    footers, read on the driver and cached with the row count and byte size
+    under every data file's (path, size, mtime_ns) and the parquet
+    converter's confs (``_footer_meta``), so no schema-inference job runs.
+    A missing table raises Spark's ``AnalysisException`` here."""
     _session_defaults(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
+    schema, rows, size, files = _footer_meta(spark, path)
+    df = spark.read.schema(schema).parquet(path)
     for col in _NANOS_TS_COLUMNS.get(name, ()):
-        field = df.schema[col]
-        if isinstance(field.dataType, T.LongType):
+        if isinstance(schema[col].dataType, T.LongType):
             df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
-    try:
-        size = os.path.getsize(path)
-    except OSError:  # directory-style parquet (runner output trees)
-        size = sum(
-            os.path.getsize(os.path.join(path, f))
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        ) if os.path.isdir(path) else 0
-    rows = _parquet_num_rows(path) if parallelize is None else None
     return _input_parallelize(
-        spark, _normalize_timestamps(df), size, rows, parallelize
+        spark, _normalize_timestamps(df), size, rows, files, parallelize
     )
 
 

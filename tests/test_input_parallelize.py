@@ -84,3 +84,23 @@ def test_pushdown_and_pruning_survive_repartition(spark):
     # pruned read schema: only the two referenced columns reach the scan
     ln = next(l for l in plan.splitlines() if l.startswith("ReadSchema"))
     assert "doc_id" in ln and "source" in ln and "text" not in ln
+
+
+def test_many_file_directory_keeps_plain_scan(spark, tmp_path):
+    """A directory with at least half the cores' worth of data files is
+    already spread over the cores: no Repartition, even though its bytes
+    and its fat rows would repartition the same data as one file."""
+    par = spark.sparkContext.defaultParallelism
+    df = spark.range(4000).select(
+        F.col("id").alias("doc_id"),
+        F.concat(*[F.sha2(F.concat(F.col("id"), F.lit(i)), 256) for i in range(4)]).alias("text"),
+    )
+    df.repartition(max(2, par // 2)).write.parquet(str(tmp_path / "many" / "documents.parquet"))
+    df.coalesce(1).write.parquet(str(tmp_path / "one" / "documents.parquet"))
+    many = tsrc.load_table(spark, str(tmp_path / "many"), "documents")
+    one = tsrc.load_table(spark, str(tmp_path / "one"), "documents")
+    assert tsrc._footer_meta(spark, str(tmp_path / "many" / "documents.parquet"))[2] >= (
+        tsrc._PARALLELIZE_MIN_BYTES
+    )
+    assert "Repartition" not in _plan(many)
+    assert "RoundRobinPartitioning" in _plan(one)
