@@ -95,11 +95,6 @@ def build_parser() -> argparse.ArgumentParser:
     s = sub.add_parser("status", help="sync health (≙ GET /api)")
     _add_common(s)
 
-    c = sub.add_parser("compact", help="fold small files per block bucket")
-    c.add_argument("--out", required=True, help="derived-table output root")
-    c.add_argument("--plug", required=True, choices=sorted(PLUGS))
-    c.add_argument("--target-mb", type=int, default=128)
-
     cu = sub.add_parser(
         "curate",
         help="run the corpus-curation funnel (dedup → gates → sample → "
@@ -429,13 +424,6 @@ def main(argv: list[str] | None = None) -> int:
 
         store = PlugStateStore(os.path.join(args.out, "_state"))
         print(json.dumps(sync_status(spark, args.ops, store, list(PLUGS.values()))))
-    elif args.cmd == "compact":
-        from haf_plug_play_spark.runner.maintenance import compact_plug
-
-        stats = compact_plug(
-            spark, args.out, args.plug, target_bytes=args.target_mb << 20
-        )
-        print(json.dumps({"plug": args.plug, **stats}))
     elif args.cmd == "curate":
         from haf_plug_play_spark.ext.curate import run_curate
 

@@ -1,39 +1,33 @@
-"""Filesystem seam for the runner's maintenance/fork/state plumbing.
+"""Filesystem seam for the runner's control plane.
 
 The sync engine's data plane is already storage-agnostic (everything goes
 through ``spark.read`` / ``df.write``, which speak any Hadoop-supported
-scheme), but the CONTROL plane — compaction swaps, fork-recovery partition
-drops, the cursor state store — needs direct filesystem calls. Round 2 did
-those with ``os.listdir`` / ``os.replace`` / ``shutil.rmtree``, which only
-work on a local POSIX mount; at 100 TB these run against HDFS or an object
-store (VERDICT r2 "What's missing" #3).
+scheme), but the CONTROL plane — the plug state store, deleting
+superseded chunk directories, snapshot pointers — needs direct filesystem
+calls. Round 2 did those with ``os.listdir`` / ``os.replace`` /
+``shutil.rmtree``, which only work on a local POSIX mount; at 100 TB these
+run against HDFS or an object store (VERDICT r2 "What's missing" #3).
 
-This module routes all of it through one small interface with two
+This module routes all of it through one small interface with three
 implementations:
 
-- ``LocalFS`` — ``os``/``shutil``; the default, used by every test today.
+- ``LocalFS`` — ``os``/``shutil``; the default.
 - ``HadoopFS`` — the Hadoop FileSystem API reached through the live Spark
   JVM (``spark._jvm.org.apache.hadoop.fs``). One implementation covers
   ``file://``, ``hdfs://``, ``s3a://``, ``abfs://``, …: the FS instance is
   resolved per-path from the path's scheme, exactly how Spark's own writers
   do it. Tested locally against ``file://`` paths, which exercises the real
   Hadoop RawLocalFileSystem code path.
+- ``ObjectStoreFS`` — a conditional-write object store (below).
 
-Atomicity contract (stated, not assumed):
-
-- ``rename(src, dst)`` requires ``dst`` to NOT exist and is atomic on POSIX
-  and HDFS. On S3A it is a copy+delete — NOT atomic. The maintenance
-  protocol (maintenance.py) is rename-pair based and therefore crash-safe
-  on POSIX/HDFS; on S3A its invisibility window widens from microseconds to
-  the copy duration, and the ``_recover`` pass still converges afterwards.
-  Deployments on pure object stores should front derived tables with a
-  table format (Iceberg/Delta) or an HDFS-compatible layer; SCALE.md
-  records this honestly.
-- ``write_bytes_atomic`` gives readers old-or-new (never partial) on POSIX
-  (tmp + rename-over) and HDFS (tmp + delete + rename — a crash between the
-  two leaves the tmp file and the OLD state, which ``PlugStateStore.load``
-  falls back to; the cursor protocol is replay-idempotent so a stale cursor
-  only re-runs a chunk). On S3 the PUT itself is atomic.
+No protocol renames a directory: the runner and the snapshot tables write
+fresh, uniquely named directories and commit by rewriting one small
+document. The one atomicity the seam promises is ``write_bytes_atomic``:
+readers see old-or-new (never partial) on POSIX (tmp + rename-over) and
+HDFS (tmp + FileContext rename-over; where that is unavailable, tmp +
+delete + rename — a crash between the two leaves the tmp file and NO
+target, which the runner's readers refuse to serve as empty). On an object
+store the PUT itself is atomic.
 """
 
 from __future__ import annotations
@@ -72,12 +66,6 @@ class LocalFS:
 
     def makedirs(self, path: str) -> None:
         os.makedirs(path, exist_ok=True)
-
-    def rename(self, src: str, dst: str) -> None:
-        """Atomic move; ``dst`` must not exist (protocol invariant)."""
-        if os.path.exists(dst):
-            raise FileExistsError(f"rename target exists: {dst}")
-        os.rename(src, dst)
 
     def delete(self, path: str) -> None:
         """Recursive delete; missing path is a no-op."""
@@ -459,11 +447,8 @@ class ObjectStoreFS:
     """The FS seam over a conditional-write object store — the remote CAS
     story ``HadoopFS.supports_cas = False`` declares missing. Directories
     are virtual prefixes (``makedirs`` is a no-op, ``listdir`` derives
-    children from object keys); ``rename`` does not exist on an object
-    store and raises rather than emulating copy+delete (the snapshot
-    commit protocol never renames — that is its point; the rename-pair
-    maintenance protocol must keep using a table format or HDFS layer on
-    object stores, as SCALE.md documents).
+    children from object keys); there is no ``rename``, and no protocol
+    needs one.
 
     ``swap_if_current`` is the real thing: read the pointer (body + ETag),
     require the body to equal the caller's expectation, then conditionally
@@ -495,13 +480,6 @@ class ObjectStoreFS:
 
     def makedirs(self, path: str) -> None:
         pass  # prefixes are virtual
-
-    def rename(self, src: str, dst: str) -> None:
-        raise NotImplementedError(
-            "object stores cannot rename; the snapshot commit protocol "
-            "(runner/snapshots.py) never renames — use it, or front the "
-            "table with a table format for rename-pair protocols"
-        )
 
     def delete(self, path: str) -> None:
         self._s.delete(path)
@@ -555,7 +533,7 @@ class HadoopFS:
     Resolves the concrete FileSystem per path scheme, so the same object
     serves ``file://``, ``hdfs://`` and ``s3a://`` table roots. All methods
     keep the LocalFS contract (sorted basenames, [] on missing dirs,
-    no-overwrite rename, recursive delete).
+    recursive delete).
     """
 
     #: loud capability probe: the portable Hadoop FileSystem API exposes no
@@ -602,16 +580,6 @@ class HadoopFS:
 
     def makedirs(self, path: str) -> None:
         self._fs(path).mkdirs(self._path(path))
-
-    def rename(self, src: str, dst: str) -> None:
-        # Hadoop rename(src, existing-dir) moves src INTO dst — the opposite
-        # of os.replace. The protocol never renames onto an existing target,
-        # so enforce that here to fail loudly instead of mis-nesting.
-        fs = self._fs(src)
-        if fs.exists(self._path(dst)):
-            raise FileExistsError(f"rename target exists: {dst}")
-        if not fs.rename(self._path(src), self._path(dst)):
-            raise OSError(f"hadoop rename failed: {src} -> {dst}")
 
     def delete(self, path: str) -> None:
         fs, p = self._fs(path), self._path(path)

@@ -1,8 +1,7 @@
-"""Manifest-committed snapshot tables — the object-store-native commit the
-rename-pair maintenance protocol cannot give (runner/fs.py module docstring;
-SCALE.md "S3A rename atomicity").
+"""Manifest-committed snapshot tables — an object-store-native commit with
+time travel and vacuum, for tables ``curate`` publishes.
 
-This is the documented migration path made real: exactly the commit shape of
+This is exactly the commit shape of
 Iceberg/Delta snapshot commits (public designs), reduced to what the runner
 needs. The reference's derived tables are plain Postgres tables rebuilt by
 SQL (e.g. plugs/podping/functions.sql — the whole table is the unit of
@@ -27,9 +26,10 @@ Commit protocol (crash-safe on POSIX, HDFS, AND plain object stores):
 A crash before step 3 leaves garbage (an unreferenced data dir / manifest)
 but readers — who resolve ``_current`` → manifest → listed data dir and
 never enumerate ``data/`` — cannot observe it. There is no window, of any
-width, in which the table is missing or partial: the failure mode of the
-rename-pair protocols on S3A simply does not exist here. Old snapshots stay
-readable (time travel) until ``vacuum`` reclaims them.
+width, in which the table is missing or partial, and nothing is renamed.
+Old snapshots stay readable (time travel) until ``vacuum`` reclaims them.
+(The sync runner commits the same way, with one pointer per plug: its
+state document, runner/state.py.)
 
 Concurrent writers: when the FS seam can compare-and-swap
 (``fs.supports_cas`` — LocalFS via flock; an object store's conditional
@@ -454,8 +454,7 @@ def rewrite_snapshot(
     """Compaction, snapshot-style: read the current snapshot, rewrite it
     into ``target_files`` files as a NEW snapshot, commit by pointer swap.
     The old snapshot stays readable until vacuumed — compaction can crash
-    at any step without an invisibility window, which is precisely what
-    the rename-pair compactor cannot promise on S3A."""
+    at any step without an invisibility window."""
     fs = fs or LocalFS()
     df = read_snapshot(spark, table_dir, fs).coalesce(target_files)
     return commit_snapshot(spark, df, table_dir, fs)

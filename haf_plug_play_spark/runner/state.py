@@ -2,11 +2,12 @@
 (/root/reference/haf_plug_play/database/sql/tables.sql:3-15).
 
 One JSON document per plug holding the cursor and health fields the
-reference keeps in PostgreSQL: latest_block_num, latest_block_time,
-check_in, massive_synced. Written atomically (tmp + rename) and always
-AFTER the chunk's data writes — the cursor update is the commit point
-(sync.sql:108-111), so a crash between data and cursor replays an
-idempotent chunk instead of losing one.
+reference keeps in PostgreSQL (latest_block_num, latest_block_time,
+check_in, massive_synced) and the manifest of every table of the plug
+(``chunks``). Written atomically and always AFTER the chunk's data
+directories — saving it is the chunk's one commit point (sync.sql:108-111):
+rows, cursor and block time become visible together, and a crash before
+it leaves only unreferenced directories that no reader lists.
 """
 
 from __future__ import annotations
@@ -14,7 +15,7 @@ from __future__ import annotations
 import datetime
 import json
 import os
-from dataclasses import asdict, dataclass
+from dataclasses import asdict, dataclass, field
 
 from haf_plug_play_spark.runner.fs import LocalFS
 
@@ -28,11 +29,10 @@ class PlugState:
     latest_block_time: str | None = None
     check_in: str | None = None
     massive_synced: bool = False
-    # First block this plug ever synced — the store's floor. Resume
-    # bucket-realignment must never reach below it (it would fabricate
-    # rows outside the plug's scope), and must always reach down to it
-    # within the partial bucket (or rows already synced would be lost).
-    start_block: int | None = None
+    # The committed data: one {"first", "last", "level", "dir"} entry per
+    # (folded) run of chunks, in block order. Every table of the plug has
+    # a directory named ``dir`` holding exactly that block range's rows.
+    chunks: list[dict] = field(default_factory=list)
 
 
 class PlugStateStore:

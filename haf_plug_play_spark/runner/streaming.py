@@ -5,11 +5,12 @@ Reference parity:
   over the op log is only the trigger; each micro-batch's block range runs
   through ``PlugRunner.backfill``, so live and massive sync share one
   commit path and one table layout.
-- exactly-once (T3): a replayable source plus an idempotent sink — each
-  chunk overwrites exactly its own ``block_bucket`` partitions and writes
-  the cursor last (sync.sql:108-111), and a replayed epoch falls at or
-  below the cursor, so it is a no-op. This assumes a block-ordered op log
-  (SURVEY T13); forks go through ``PlugRunner.recover_fork``.
+- exactly-once (T3): a replayable source plus a sink with one commit
+  point — each chunk writes fresh directories that only the plug's state
+  save publishes, together with the cursor (sync.sql:108-111), and a
+  replayed epoch falls at or below the cursor, so it only checks in. This
+  assumes a block-ordered op log (SURVEY T13); forks go through
+  ``PlugRunner.recover_fork``.
 - health (T12): server/system_status.py:12-29 — BAD when any enabled plug
   lags the head by > 10 blocks or the head is > 30 s stale.
 - watchdog (T11): database/plugs.py:89-102 — restart dead queries, flag

@@ -1,5 +1,5 @@
 """CLI surface tests (cli.main with argv, no subprocess): backfill →
-status → compact against a generated op log, mirroring the
+status against a generated op log, mirroring the
 reference's run_plug_play.py entry-point flow."""
 
 from __future__ import annotations
@@ -34,9 +34,6 @@ def test_cli_backfill_status_compact_promote(spark, tmp_path, capsys):
     status = _run(capsys, ["status", "--ops", ops, "--out", out])
     assert status["head_block_num"] == hi
     assert any(p["plug"] == "podping" and p["lag_blocks"] == 0 for p in status["plugs"])
-
-    compacted = _run(capsys, ["compact", "--out", out, "--plug", "podping"])
-    assert compacted["files_before"] >= compacted["files_after"]
 
 
 def test_cli_snapshot_lifecycle(spark, tmp_path, capsys):

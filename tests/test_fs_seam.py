@@ -4,9 +4,10 @@ Two layers:
 1. Contract parity — LocalFS and HadoopFS must behave identically on the
    same operations (HadoopFS runs against file:// through Spark's JVM, so
    the real Hadoop RawLocalFileSystem code path executes).
-2. Protocol-through-seam — compaction, fork recovery and the state store
-   stay green when routed through HadoopFS, proving the control plane no
-   longer depends on POSIX os/shutil (VERDICT r2 "What's missing" #3).
+2. Protocol-through-seam — the runner's chunk commit, fork recovery and
+   the state store stay green when routed through HadoopFS and through
+   ObjectStoreFS, proving the control plane depends neither on POSIX
+   os/shutil (VERDICT r2 "What's missing" #3) nor on rename.
 """
 
 from __future__ import annotations
@@ -15,7 +16,12 @@ import os
 
 import pytest
 
-from haf_plug_play_spark.runner.fs import HadoopFS, LocalFS
+from haf_plug_play_spark.runner.fs import (
+    EmulatedObjectStore,
+    HadoopFS,
+    LocalFS,
+    ObjectStoreFS,
+)
 
 
 @pytest.fixture(params=["local", "hadoop"])
@@ -44,14 +50,6 @@ def test_fs_contract(fs, tmp_path):
     fs.makedirs(os.path.join(root, "d1"))
     assert sorted(fs.listdir(root)) == ["a.json", "d1"]
 
-    # rename: atomic move, target must NOT exist (protocol invariant —
-    # Hadoop rename-into-existing-dir semantics would silently mis-nest)
-    fs.rename(os.path.join(root, "d1"), os.path.join(root, "d2"))
-    assert fs.isdir(os.path.join(root, "d2")) and not fs.exists(os.path.join(root, "d1"))
-    fs.makedirs(os.path.join(root, "d3"))
-    with pytest.raises(Exception):
-        fs.rename(os.path.join(root, "d2"), os.path.join(root, "d3"))
-
     # recursive delete; missing path is a no-op
     fs.makedirs(os.path.join(root, "d2", "nested"))
     fs.delete(os.path.join(root, "d2"))
@@ -64,47 +62,37 @@ def test_state_store_through_hadoop_fs(spark, tmp_path):
 
     store = PlugStateStore(str(tmp_path / "state"), fs=HadoopFS(spark))
     assert store.load("p").latest_block_num == -1  # missing -> fresh
-    st = PlugState(plug="p", latest_block_num=123, start_block=100)
+    chunks = [{"first": 100, "last": 123, "level": 0, "dir": "c-100-123-0"}]
+    st = PlugState(plug="p", latest_block_num=123, chunks=chunks)
     store.save(st)
     again = store.load("p")
-    assert again.latest_block_num == 123 and again.start_block == 100
+    assert again.latest_block_num == 123 and again.chunks == chunks
     assert store.check_in_age("p") is not None
 
 
-def test_compaction_through_hadoop_fs(spark, tmp_path):
-    """Same scenario as test_runner.test_compaction_preserves_rows, but all
-    control-plane calls via the Hadoop FileSystem API."""
-    from haf_plug_play_spark.runner.maintenance import compact_table
-
-    hfs = HadoopFS(spark)
-    tdir = str(tmp_path / "tbl")
-    df = spark.range(0, 1000).withColumnRenamed("id", "block_num")
-    # fragment bucket 0 into 8 files; bucket 1 stays single-file
-    for i in range(8):
-        df.filter((df.block_num < 500) & (df.block_num % 8 == i)).coalesce(
-            1
-        ).write.mode("append").parquet(os.path.join(tdir, "block_bucket=0"))
-    df.filter(df.block_num >= 500).coalesce(1).write.parquet(
-        os.path.join(tdir, "block_bucket=1")
-    )
-    before = spark.read.parquet(tdir).groupBy().sum("block_num").first()[0]
-    stats = compact_table(spark, tdir, fs=hfs)
-    assert stats["buckets_compacted"] == 1
-    assert stats["files_after"] < stats["files_before"]
-    after = spark.read.parquet(tdir).groupBy().sum("block_num").first()[0]
-    assert before == after
-    # maintenance side-car cleaned up: no _old_/_compact_ leftovers
-    mdir = tdir + ".maintenance"
-    leftovers = [e for e in hfs.listdir(mdir) if e.startswith(("_old_", "_compact_"))]
-    assert leftovers == []
+@pytest.fixture(params=["local", "hadoop", "object"])
+def any_fs(request, spark):
+    if request.param == "local":
+        return LocalFS()
+    if request.param == "object":
+        return ObjectStoreFS(EmulatedObjectStore())
+    return HadoopFS(spark)
 
 
-def test_fork_recovery_through_hadoop_fs(spark, tmp_path):
-    """Fork recovery (drop-tail + boundary rewrite + cursor rewind) routed
-    through HadoopFS end-to-end."""
+def test_fork_crash_replay_on_every_fs(spark, any_fs, tmp_path, monkeypatch):
+    """The runner's whole control plane through each backend: fork
+    recovery, a crashed chunk and a replay. ObjectStoreFS cannot rename,
+    so the runner must commit without one. The crash is an orphan chunk
+    directory written but never committed: no reader sees it, and the
+    retry that follows converges to the one-shot result. A lost state
+    file is refused rather than read as an empty plug."""
     from haf_plug_play_spark import fixtures
+    from haf_plug_play_spark.ingest.envelope import parse_custom_json
     from haf_plug_play_spark.plugs import PLUGS
     from haf_plug_play_spark.runner.batch import PlugRunner
+    from haf_plug_play_spark.runner.state import PlugStateStore
+
+    from .compare import canonical
 
     ops_df, trx_df = fixtures.as_dataframes(spark, 600, 7)
     ops_path, trx_path = str(tmp_path / "ops"), str(tmp_path / "trx")
@@ -112,20 +100,55 @@ def test_fork_recovery_through_hadoop_fs(spark, tmp_path):
     trx_df.write.parquet(trx_path)
     lo = ops_df.agg({"block_num": "min"}).first()[0]
     hi = ops_df.agg({"block_num": "max"}).first()[0]
+    plug = PLUGS["podping"]
     runner = PlugRunner(
-        spark, PLUGS["podping"], ops_path, trx_path, str(tmp_path / "out"),
-        step=100, fs=HadoopFS(spark),
+        spark, plug, ops_path, trx_path, str(tmp_path / "out"), step=100, fs=any_fs,
     )
+
+    def rows(df):
+        cols = sorted(df.columns)
+        return canonical(cols, [tuple(r[c] for c in cols) for r in df.select(cols).collect()])
+
+    def expected(upto):
+        ops = spark.read.parquet(ops_path).filter(f"block_num <= {upto}")
+        trx = spark.read.parquet(trx_path).filter(f"block_num <= {upto}")
+        return {t: rows(df) for t, df in plug.transform(parse_custom_json(ops, trx)).items()}
+
+    def check(upto):
+        want = expected(upto)
+        for t in ("podping_ops", "podping_updates"):
+            assert rows(runner.read_table(t)) == want[t], (t, upto)
+
     runner.backfill(lo, hi)
-    full = runner.read_table("podping_updates").count()
     fork = lo + (hi - lo) // 2
     runner.recover_fork(fork)
     assert runner.store.load("podping").latest_block_num == fork
-    kept = runner.read_table("podping_updates")
-    assert kept.filter(f"block_num > {fork}").count() == 0
-    # resync converges back to the full result
+    check(fork)
+
+    # crash at the commit point: the next chunk's directories are written,
+    # the state save that would publish them never happens
+    def crash(self, state):
+        raise RuntimeError("injected crash at the commit point")
+
+    monkeypatch.setattr(PlugStateStore, "save", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        runner.backfill(lo, hi)
+    monkeypatch.undo()
+    tdir = runner._table_dir("podping_ops")
+    committed = {e["dir"] for e in runner.store.load("podping").chunks}
+    assert set(any_fs.listdir(tdir)) - committed  # the orphan is there
+    check(fork)  # … and unseen
+
     runner.backfill(lo, hi)
-    assert runner.read_table("podping_updates").count() == full
+    assert runner.store.load("podping").latest_block_num == hi
+    check(hi)
+    # a replayed chunk only checks in
+    runner.process_range(lo, lo + 99)
+    check(hi)
+    # a lost state file beside table data raises; it never reads as empty
+    any_fs.delete(runner.store._path("podping"))
+    with pytest.raises(RuntimeError, match="never synced"):
+        runner.read_table("podping_ops")
 
 
 def test_write_bytes_atomic_survives_rename_that_landed_then_raised(

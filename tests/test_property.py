@@ -490,14 +490,14 @@ def test_snapshot_append_interleaving_property(spark, tmp_path):
 
 
 def test_runner_fork_backfill_interleaving_property(spark, tmp_path):
-    """Re-entrant fork recovery × backfill × stale-retry under random
-    schedules, including mid-boundary-swap crashes at BOTH positions
-    (partial rewrite left beside its source / completed rewrite left
-    orphaned): after any schedule plus a final full backfill, every
-    silver table equals the clean one-shot replay and the cursor equals
-    the log head. 12 seeds x ~5 actions; each action runs real Spark
-    jobs, so the seed count trades coverage against suite wall-clock
-    (the schedule space is small: 4 action kinds over 4 buckets)."""
+    """Fork recovery × backfill × stale-retry under random schedules,
+    including crashed writes at BOTH positions (a partial or a complete
+    directory the state never committed, left beside the committed ones):
+    after any schedule plus a final full backfill, every silver table
+    equals the clean one-shot replay and the cursor equals the log head.
+    12 seeds x ~5 actions; each action runs real Spark jobs, so the seed
+    count trades coverage against suite wall-clock (the schedule space is
+    small: 4 action kinds over 4 chunks)."""
     import os
     import random
     import shutil
@@ -537,7 +537,7 @@ def test_runner_fork_backfill_interleaving_property(spark, tmp_path):
             spark, PLUGS["podping"], ops_path, trx_path, out, step=step
         )
         runner.backfill(lo, lo + step)  # seed some synced state
-        for _ in range(rng.randint(3, 5)):
+        for step_no in range(rng.randint(3, 5)):
             cursor = runner.store.load("podping").latest_block_num
             action = rng.choice(["extend", "stale", "fork", "crashed_fork"])
             if action == "extend":
@@ -549,24 +549,19 @@ def test_runner_fork_backfill_interleaving_property(spark, tmp_path):
             else:
                 fork = rng.randint(lo, cursor)
                 if action == "crashed_fork":
-                    # inject a crash artifact in a random synced bucket of a
-                    # random table, at a random crash position
-                    tables = [
-                        tn for tn in runner._silver_table_names()
-                        if os.path.isdir(runner._table_dir(tn))
-                    ]
-                    if tables:
-                        tdir = runner._table_dir(rng.choice(tables))
-                        buckets = [
-                            e for e in os.listdir(tdir)
-                            if e.startswith("block_bucket=")
-                        ]
-                        if buckets:
-                            b = os.path.join(tdir, rng.choice(buckets))
-                            if rng.random() < 0.5:
-                                shutil.copytree(b, b + ".rewrite")  # partial
-                            else:
-                                os.rename(b, b + ".rewrite")  # completed
+                    # inject a crashed write into a random table: a
+                    # directory the state does not name, as a chunk or a
+                    # fork rewrite leaves it when the process dies before
+                    # its commit — mid-write or complete
+                    entries = runner.store.load("podping").chunks
+                    if entries:
+                        tdir = runner._table_dir(rng.choice(runner._silver_table_names()))
+                        src = os.path.join(tdir, rng.choice(entries)["dir"])
+                        orphan = os.path.join(tdir, f"c-orphan-{seed}-{step_no}")
+                        if rng.random() < 0.5:
+                            os.makedirs(os.path.join(orphan, "_temporary", "0"))
+                        else:
+                            shutil.copytree(src, orphan)
                 runner.recover_fork(fork)
                 assert runner.store.load("podping").latest_block_num <= fork
         runner.backfill(lo, hi)

@@ -103,10 +103,10 @@ def test_backfill_resume_and_guards(spark, oplog, tmp_path):
     mid = (lo + hi) // 2
     runner = PlugRunner(spark, PLUGS["podping"], ops_path, trx_path, str(tmp_path), step=STEP)
     runner.backfill(lo, mid)
-    # second call spans the whole range: monotonic guard clips to the
-    # cursor's bucket (partial-bucket re-process is idempotent)
+    # second call spans the whole range: the monotonic guard clips it to
+    # the block after the cursor
     ranges = runner.backfill(lo, hi)
-    assert ranges[0][0] == ((mid + 1) // STEP) * STEP
+    assert ranges[0][0] == mid + 1
     assert runner.backfill(lo, mid) == []  # stale range → no-op (T10)
     expected = _expected(spark, ops_path, trx_path, PLUGS["podping"])
     _assert_same(runner.read_table("podping_ops"), expected["podping_ops"], "podping_ops")
@@ -197,8 +197,10 @@ def test_read_table_declared_schema_matches_inferred(spark, synced, tmp_path):
             spark, runner.plug, runner.ops_path, runner.trx_path,
             str(tmp_path / name), step=STEP,
         )
+        entries = runner.store.load(name).chunks
         for table in tables:
-            inferred = spark.read.parquet(runner._table_dir(table)).drop("block_bucket")
+            # an inferring read of the directories the state names
+            inferred = spark.read.parquet(*runner._dirs(table, entries))
             got = runner.read_table(table)
             assert got.schema == inferred.schema, (name, table)
             assert _rows(got) == _rows(inferred), (name, table)
@@ -222,38 +224,73 @@ def test_serving_context_launches_no_jobs(spark, synced):
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
+def test_serving_context_independent_of_history(spark, oplog, tmp_path):
+    """The serving context's cost does not grow with the synced history: at
+    5 chunks and at 40 every polls table reads the same number of
+    directories, and building the context launches no job (Spark lists
+    more than 32 paths with a job). The rows equal the one-shot result."""
+    import os
+
+    ops_path, trx_path, lo, _ = oplog
+    step = 40
+    runner = PlugRunner(spark, PLUGS["polls"], ops_path, trx_path, str(tmp_path), step=step)
+    sc = spark.sparkContext
+
+    def context(chunks: int) -> dict[str, int]:
+        runner.backfill(lo, (lo // step + chunks) * step - 1)
+        group = f"test-history-{chunks}"
+        sc.setJobGroup(group, group)
+        try:
+            frames = {t: runner.read_table(t) for t in runner._silver_table_names()}
+            runner.read_gold("polls_content")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], chunks
+        return {t: len({os.path.dirname(f) for f in df.inputFiles()}) for t, df in frames.items()}
+
+    at5 = context(5)
+    assert context(40) == at5
+    _check_plug_outputs(
+        runner,
+        _expected(spark, ops_path, trx_path, PLUGS["polls"], max_block=(lo // step + 40) * step - 1),
+    )
+
+
 def test_bucket_files_sorted_by_block_num(synced):
-    """Each bucket is one file sorted on block_num, so parquet min/max
-    stats on block_num are tight (SCALE.md)."""
+    """Each directory the state names holds one file sorted on block_num,
+    so parquet min/max stats on block_num are tight (SCALE.md)."""
     import glob
 
     import pyarrow.parquet as pq
 
-    for runner in synced.values():
+    for name, runner in synced.items():
+        entries = runner.store.load(name).chunks
         for table in runner._silver_table_names():
-            files = glob.glob(f"{runner._table_dir(table)}/block_bucket=*/*.parquet")
-            buckets = glob.glob(f"{runner._table_dir(table)}/block_bucket=*")
-            assert len(files) == len(buckets), table
-            for f in files:
-                blocks = pq.read_table(f, columns=["block_num"]).column(0).to_pylist()
-                assert blocks == sorted(blocks), f
+            for d in runner._dirs(table, entries):
+                files = glob.glob(f"{d}/*.parquet")
+                assert len(files) == 1, d
+                blocks = pq.read_table(files[0], columns=["block_num"]).column(0).to_pylist()
+                assert blocks == sorted(blocks), d
 
 
 def test_failed_table_write_aborts_chunk_commit(spark, oplog, tmp_path, monkeypatch):
     """The chunk's tables are written concurrently; one failed write must
-    fail the chunk and leave the cursor and block time where they were, and
-    a plain retry must converge to the one-shot result (exactly-once)."""
+    fail the chunk and leave the cursor, the block time and every table's
+    rows where they were (no table shows the failed chunk), and a plain
+    retry must converge to the one-shot result (exactly-once)."""
     ops_path, trx_path, lo, hi = oplog
     runner = PlugRunner(spark, PLUGS["polls"], ops_path, trx_path, str(tmp_path), step=STEP)
     first_bucket_end = (lo // STEP) * STEP + STEP - 1
     runner.backfill(lo, first_bucket_end)
     before = runner.store.load("polls")
+    tables = runner._silver_table_names()
+    rows_before = {t: _rows(runner.read_table(t)) for t in tables}
     write = PlugRunner._write_append_table
 
-    def failing(self, table, df):
+    def failing(self, table, *args):
         if table == "polls_votes":
             raise RuntimeError("injected write failure")
-        write(self, table, df)
+        write(self, table, *args)
 
     monkeypatch.setattr(PlugRunner, "_write_append_table", failing)
     with pytest.raises(RuntimeError, match="injected write failure"):
@@ -261,6 +298,8 @@ def test_failed_table_write_aborts_chunk_commit(spark, oplog, tmp_path, monkeypa
     after = runner.store.load("polls")
     assert after.latest_block_num == before.latest_block_num
     assert after.latest_block_time == before.latest_block_time
+    for t in tables:
+        assert _rows(runner.read_table(t)) == rows_before[t], t
     monkeypatch.undo()
     runner.backfill(lo, hi)
     _check_plug_outputs(runner, _expected(spark, ops_path, trx_path, PLUGS["polls"]))
@@ -287,10 +326,18 @@ def test_chunk_writes_keep_job_group_and_pool(spark, oplog, tmp_path):
     assert len(jobs) >= tables + 1  # one write per table plus the cursor max
     store = sc._jsc.sc().statusStore()
     for job in jobs:
+        ran = 0
         for stage in tracker.getJobInfo(job).stageIds:
+            # once the store holds more than spark.ui.retainedStages, Spark
+            # evicts never-run (skipped) stages first; the count below
+            # checks that no stage that ran went missing
+            if tracker.getStageInfo(stage) is None:
+                continue
             attempt = store.lastStageAttempt(stage)
             if attempt.status().toString() != "SKIPPED":  # never scheduled
                 assert attempt.schedulingPool() == "plug-polls"
+                ran += 1
+        assert ran == store.job(job).numCompletedStages(), job
 
 
 def test_fork_recovery(spark, oplog, tmp_path):
@@ -364,70 +411,45 @@ def test_sync_status(spark, oplog, tmp_path):
     assert sync_status(spark, ops_path, runner.store, [PLUGS["polls"]], now=fresh_now)["status"] == "BAD"
 
 
-def test_compaction_preserves_rows(spark, oplog, tmp_path):
-    """Small-file compaction must fold a fragmented bucket into fewer files
-    with byte-identical content, leaving already-compact buckets alone."""
-    from haf_plug_play_spark.runner.maintenance import compact_table
+def test_compaction_preserves_rows(spark, oplog, tmp_path, monkeypatch):
+    """A chunk that completes FOLD_FANIN entries of one level rewrites them
+    with its own rows as one entry of the next level: rows identical, one
+    directory in place of eight (the superseded ones deleted), and every
+    output file sorted on block_num — also when the fold's input asks for
+    several files (the file target is shrunk here to force that)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from haf_plug_play_spark.runner import batch
 
     ops_path, trx_path, lo, _ = oplog
     runner = PlugRunner(spark, PLUGS["podping"], ops_path, trx_path, str(tmp_path), step=STEP)
-    runner.backfill(lo, lo + 3 * STEP - 1)
-    tdir = runner._table_dir("podping_ops")
-    # fragment one bucket: rewrite it as many tiny files
-    import os
-
-    bucket = next(d for d in sorted(os.listdir(tdir)) if d.startswith("block_bucket="))
-    bdir = os.path.join(tdir, bucket)
-    df = spark.read.parquet(bdir)
-    before_rows = _rows(df)
-    df.repartition(8).write.mode("overwrite").parquet(bdir + ".tmp")
-    import shutil
-
-    shutil.rmtree(bdir)
-    os.replace(bdir + ".tmp", bdir)
-    assert len([f for f in os.listdir(bdir) if f.endswith(".parquet")]) == 8
-    stats = compact_table(spark, tdir)
-    assert stats["buckets_compacted"] == 1  # only the fragmented bucket
-    assert len([f for f in os.listdir(bdir) if f.endswith(".parquet")]) == 1
-    assert _rows(spark.read.parquet(bdir)) == before_rows
-    # cumulative read still works and the runner's table is intact
-    assert _rows(runner.read_table("podping_ops")) == _rows(
-        runner.read_table("podping_ops")
-    )
-
-
-def test_compaction_crash_recovery(spark, oplog, tmp_path):
-    """Interrupted compaction states must self-heal on the next run: a
-    moved-aside bucket whose replacement never landed is restored; stray
-    temp dirs are dropped; readers never see either (underscore prefix)."""
-    import os
-    import shutil
-
-    from haf_plug_play_spark.runner.maintenance import compact_table
-
-    ops_path, trx_path, lo, _ = oplog
-    runner = PlugRunner(spark, PLUGS["podping"], ops_path, trx_path, str(tmp_path), step=STEP)
-    runner.backfill(lo, lo + 2 * STEP - 1)
-    tdir = runner._table_dir("podping_ops")
-    mdir = tdir + ".maintenance"
-    os.makedirs(mdir, exist_ok=True)
-    before = _rows(spark.read.parquet(tdir))
-    buckets = sorted(d for d in os.listdir(tdir) if d.startswith("block_bucket="))
-    # crash window A: temp dir written, swap never started
-    shutil.copytree(os.path.join(tdir, buckets[0]), os.path.join(mdir, "_compact_" + buckets[0]))
-    # crash window B: bucket moved aside, replacement never landed
-    os.replace(os.path.join(tdir, buckets[1]), os.path.join(mdir, "_old_" + buckets[1]))
-    # leftovers live OUTSIDE the table dir: readers see neither duplicates
-    # nor a conflicting partition column (bucket[1]'s rows are invisible
-    # until recovery, but nothing is duplicated/partial)
-    mid = spark.read.parquet(tdir)
-    assert mid.select("block_bucket").distinct().count() == len(buckets) - 1
-    compact_table(spark, tdir)
-    assert sorted(d for d in os.listdir(tdir) if d.startswith("block_bucket=")) == buckets
-    assert os.listdir(mdir) == []
-    assert _rows(spark.read.parquet(tdir)) == before
-    # the maintenance side-car never pollutes table discovery
-    assert "podping_ops.maintenance" not in runner._silver_table_names()
+    end = (lo // STEP + batch.FOLD_FANIN - 1) * STEP - 1  # one chunk short of a fold
+    runner.backfill(lo, end)
+    entries = runner.store.load("podping").chunks
+    assert [e["level"] for e in entries] == [0] * (batch.FOLD_FANIN - 1)
+    tables = runner._silver_table_names()
+    before = {t: _rows(runner.read_table(t)) for t in tables}
+    target = runner._bytes("podping_ops", entries) // 3
+    monkeypatch.setattr(batch, "FOLD_FILE_BYTES", target)
+    runner.backfill(lo, end + STEP)
+    (entry,) = runner.store.load("podping").chunks
+    assert entry["level"] == 1 and entry["first"] == entries[0]["first"]
+    expected = _expected(spark, ops_path, trx_path, PLUGS["podping"], max_block=end + STEP)
+    for t in ("podping_ops", "podping_updates"):
+        assert _rows(runner.read_table(t)) == _rows(expected[t]), t
+    for t in tables:
+        assert set(before[t]) <= set(_rows(runner.read_table(t))), t
+        for d in runner._dirs(t, entries):
+            assert not glob.glob(d), d
+        (d,) = runner._dirs(t, [entry])
+        files = glob.glob(f"{d}/*.parquet")
+        if t == "podping_ops":
+            assert len(files) >= 3, files
+        for f in files:
+            blocks = pq.read_table(f, columns=["block_num"]).column(0).to_pylist()
+            assert blocks == sorted(blocks), f
 
 
 def test_per_plug_scheduler_pool(spark, oplog, tmp_path):
@@ -519,56 +541,23 @@ def test_watchdog(spark, oplog, tmp_path):
     old = datetime.datetime.now(datetime.timezone.utc) + datetime.timedelta(seconds=120)
     assert dog.check(now=old).stale_plugs == ["podping"]
 
-def test_fork_recovery_reentrant_after_crash(spark, oplog, tmp_path):
-    """review r9: a crash mid-boundary-swap leaves a '.rewrite' dir that
-    used to wedge every rerun (int('N.rewrite') ValueError). Both crash
-    positions recover: source present → partial rewrite discarded and
-    redone; source missing → completed rewrite renamed into place."""
-    import os
-    import shutil
-
-    ops_path, trx_path, lo, hi = oplog
-    fork = lo + (hi - lo) * 2 // 3
-    runner = PlugRunner(
-        spark, PLUGS["polls"], ops_path, trx_path, str(tmp_path), step=STEP
-    )
-    runner.backfill(lo, hi)
-
-    # simulate crash A: rewrite dir written, source still present
-    tdir = runner._table_dir("polls_ops")
-    boundary = os.path.join(tdir, f"block_bucket={fork // STEP}")
-    shutil.copytree(boundary, boundary + ".rewrite")
-    runner.recover_fork(fork)
-    assert not os.path.exists(boundary + ".rewrite")
-    truncated = _expected(spark, ops_path, trx_path, PLUGS["polls"], max_block=fork)
-    _check_plug_outputs(runner, truncated)
-
-    # simulate crash B: source deleted, completed rewrite left behind —
-    # recovery must restore it by rename, losing nothing
-    runner.backfill(lo, hi)
-    boundary2 = os.path.join(tdir, f"block_bucket={fork // STEP}")
-    os.rename(boundary2, boundary2 + ".rewrite")
-    runner.recover_fork(fork)
-    assert os.path.isdir(boundary2)
-    _check_plug_outputs(runner, truncated)
-
-
 def test_process_range_refuses_cross_bucket_ranges(spark, oplog, tmp_path):
-    """review r9: process_range replaces whole block_bucket partitions, so
-    a direct call crossing a bucket boundary would silently delete
-    previously-synced rows — refused loudly; backfill's aligned chunks
-    still pass."""
+    """process_range writes fresh directories and clips to the cursor, so a
+    direct call across step boundaries loses nothing: a cross-step range
+    followed by a backfill equals the one-shot result."""
     ops_path, trx_path, lo, hi = oplog
     runner = PlugRunner(
         spark, PLUGS["polls"], ops_path, trx_path, str(tmp_path), step=STEP
     )
-    with pytest.raises(ValueError, match="crosses a block_bucket"):
-        runner.process_range(STEP - 1, STEP)
+    runner.process_range(lo, lo + STEP + STEP // 2)
+    assert runner.store.load("polls").latest_block_num == lo + STEP + STEP // 2
+    runner.backfill(lo, hi)
+    _check_plug_outputs(runner, _expected(spark, ops_path, trx_path, PLUGS["polls"]))
 
 
 def test_backfill_empty_range_records_no_floor(spark, oplog, tmp_path):
     """review r9: an inverted/empty range on a fresh store must not
-    persist start_block or massive_synced — it used to permanently block
+    persist massive_synced or any chunk — it used to permanently block
     earlier blocks from a later correct backfill."""
     ops_path, trx_path, lo, hi = oplog
     runner = PlugRunner(
@@ -576,7 +565,7 @@ def test_backfill_empty_range_records_no_floor(spark, oplog, tmp_path):
     )
     assert runner.backfill(hi, lo) == []  # inverted args → no-op
     st = runner.store.load("polls")
-    assert st.start_block is None and not st.massive_synced
+    assert not st.massive_synced
     # a later correct backfill covers the full range from lo
     ranges = runner.backfill(lo, lo + 2 * STEP)
     assert ranges and ranges[0][0] <= lo
